@@ -1009,19 +1009,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     * level's (level intervals are the window starts, so aligned bounds
     * and metric predicates carry over verbatim).
     */
-  /** metric's partition bucket, computed driver-side with the SAME hash
-    * the writer stamps (MetricStore.withPartitionCols:
-    * pmod(hash(metric), numBuckets); functions.hash = Murmur3, seed 42).
-    */
-  private def pbOf(name: String): Int = {
-    val h = Murmur3Hash(
-      Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(name),
-        org.apache.spark.sql.types.StringType)), 42)
-      .eval(null).asInstanceOf[Int]
-    val n = store.effectiveBuckets
-    ((h % n) + n) % n
-  }
-
   private def applyCarried(rel: LogicalPlan, preds: Seq[Expression],
                            leaf: LogicalPlan, bucketSecs: Long): LogicalPlan =
     if (preds.isEmpty) rel
@@ -1041,7 +1028,7 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
       val pbIn = for {
         ns <- pinnedNames(preds, metricId)
         pbAttr <- rel.output.find(_.name == "pb")
-      } yield In(pbAttr, ns.map(pbOf).distinct.sorted.map(b => Literal(b)))
+      } yield In(pbAttr, ns.map(store.pbOf).distinct.sorted.map(b => Literal(b)))
       // carried interval bounds prune TIME-bucket directories the same
       // way: tb = interval div bucketSecs (the writer's layout), so
       // interval >= L implies tb >= L div bucketSecs and interval < U

@@ -36,7 +36,17 @@ final case class FetchResult(
   *
   * All merging is metric-agnostic: one store holds MANY metrics (the
   * BASELINE.json mandate — whisper's one-file-per-metric is not
-  * replicated) and every operation below is a distributed dataframe job.
+  * replicated) and every operation below is a distributed dataframe job,
+  * with one exception sized to stay small: `updateMany` picks its cascade
+  * regime from the batch's size after the routing stats pass — routed
+  * points plus, per coarser level, the child rows its touched windows can
+  * hold. At or under [[MetricStore.DriverCascadeMaxRows]] (65,536 rows),
+  * an incremental batch on levels that all exist with count columns has
+  * its touched-window cascade planned on the driver over collected rows
+  * (one pruned read per level, all levels concurrent) and lands every
+  * level's upsert at once through the same distributed touched-partition
+  * merge. Larger batches, fresh levels, `cascade = false` and legacy
+  * levels run the distributed cascade.
   */
 final class MetricStore(val spark: SparkSession, val root: String,
                         val numBuckets: Int = 32) {
@@ -397,6 +407,21 @@ final class MetricStore(val spark: SparkSession, val root: String,
     df.withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
       .withColumn("tb", expr(s"interval div ${bucketSeconds(step)}"))
 
+  /** A metric's partition bucket computed on the driver with the SAME
+    * hash the writer stamps in [[withPartitionCols]]:
+    * pmod(hash(metric), effectiveBuckets), functions.hash = Murmur3 with
+    * seed 42. Shared by substituted-scan pruning and the driver-planned
+    * cascade's directory reads.
+    */
+  private[graft] def pbOf(metric: String): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    val h = Murmur3Hash(
+      Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(metric),
+        org.apache.spark.sql.types.StringType)), 42)
+      .eval(null).asInstanceOf[Int]
+    Math.floorMod(h, effectiveBuckets)
+  }
+
   /** Merge `incoming` (metric, interval, value, prio) into level i:
     * read ONLY the touched (pb, tb) partitions, last-write-wins by prio
     * (existing rows get prio -1), dynamically overwrite those partitions.
@@ -411,11 +436,24 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * bench artifact then can't say whether a job-count asymmetry is
     * fan-out commits or cascade work. The tag rides the job-description
     * local property, so it also labels the writes in the Spark UI.
+    *
+    * Pool threads inherit local properties from whichever thread created
+    * them, so every task that runs on a pool sets its own tag through
+    * this or [[taggedRead]] rather than trusting what it inherited.
     */
-  private def taggedWrite[T](i: Int)(body: => T): T = {
+  private def taggedWrite[T](i: Int)(body: => T): T =
+    tagged(s"graft.store.write level=$i")(body)
+
+  /** [[taggedWrite]]'s counterpart for the driver-planned cascade's
+    * change-set reads, so write-job counts keyed on the tag see writes only.
+    */
+  private def taggedRead[T](i: Int)(body: => T): T =
+    tagged(s"graft.store.read level=$i")(body)
+
+  private def tagged[T](description: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.store.write level=$i")
+    sc.setJobDescription(description)
     try body
     finally sc.setJobDescription(prev)
   }
@@ -651,9 +689,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
                                 lo: Long, hi: Long): Option[Seq[String]] = {
     val tbLo = lo / bucketSecs
     val tbHi = (hi - 1) / bucketSecs
-    if (tbHi < tbLo || (tbHi - tbLo + 1) * numBuckets > 4096) None
+    if (tbHi < tbLo || (tbHi - tbLo + 1) * effectiveBuckets > 4096) None
     else Some(for {
-      pb <- 0 until numBuckets
+      pb <- 0 until effectiveBuckets
       tb <- (tbLo to tbHi).toSeq
     } yield s"${levelPath(i)}/pb=$pb/tb=$tb")
   }
@@ -784,6 +822,23 @@ final class MetricStore(val spark: SparkSession, val root: String,
       // case — w20/x00 — where every level is fresh)
       val freshLevels: Set[Int] =
         steps.indices.filterNot(i => new java.io.File(levelPath(i)).exists()).toSet
+
+      // small incremental batch: plan the cascade on the driver and land
+      // every level's upsert at once (see [[plannedUpserts]]); anything
+      // else runs the Spark cascade below
+      if (cascade && freshLevels.isEmpty && directCounts.nonEmpty &&
+        plannedCascadeRows(steps, directCounts) <= driverCascadeBound &&
+        steps.indices.drop(1).forall(levelHasCountCols)) {
+        val planned = plannedUpserts(routed, policy)
+        if (planned.nonEmpty) {
+          planned.get.foreach { case (i, incoming, touched) =>
+            pendingWrites += scala.concurrent.Future(taggedWrite(i)(
+              writeMerged(i, mergedTouched(i, incoming, touched), touched.map(_._1))
+            ))(MetricStore.writeEc)
+          }
+          return
+        }
+      }
 
       // deferred-write dispatcher. `launchDeferred` releases the held
       // write to the background pool once its pre-write state has been
@@ -1051,6 +1106,144 @@ final class MetricStore(val spark: SparkSession, val root: String,
         checkpoints.foreach(releaseCheckpoint)
       }
     }
+  }
+
+  /** Row bound under which [[updateManyForPolicy]] plans the cascade on
+    * the driver (default [[MetricStore.DriverCascadeMaxRows]]). Tests set
+    * it to 0 to force the Spark cascade, or to Long.MaxValue to force the
+    * driver plan wherever the store is eligible.
+    */
+  private[graft] var driverCascadeBound: Long = MetricStore.DriverCascadeMaxRows
+
+  /** Input size of the driver-planned cascade, from the stats pass alone:
+    * the routed points plus, per level i ≥ 1, the child rows its touched
+    * windows can hold. A point touches at most one window per coarser
+    * level, so the points routed finer than level i bound its touched
+    * windows, and each window holds steps(i) / steps(i-1) child slots.
+    */
+  private def plannedCascadeRows(steps: Seq[Int], directCounts: Map[Int, Long]): Long =
+    directCounts.values.sum + steps.indices.drop(1).map { i =>
+      (0 until i).map(directCounts.getOrElse(_, 0L)).sum * (steps(i) / steps(i - 1))
+    }.sum
+
+  /** The cascade of a small incremental batch, planned on the driver:
+    * one job collects the routed batch, one pruned read per level (all
+    * levels concurrent, on the write pool) collects the existing child
+    * rows of every window the batch can touch, and the touched-window
+    * cascade then runs in plain Scala under the Spark cascade's rules —
+    * the kernel over chronologically ordered children, the xff gate on
+    * child rows, known/vsum nulled by any unknown child, direct beats
+    * propagated. Only windows with an actual change below them (a
+    * propagated row that passed xff, or a direct point) are recomputed,
+    * so every other window keeps its on-disk value.
+    *
+    * Returns each level's incoming rows (partition columns and prio
+    * included) with their touched (pb, tb) set, ready for
+    * [[mergedTouched]] + [[writeMerged]]; None for inputs only the Spark
+    * cascade handles — pre-epoch intervals (its truncating alignment
+    * puts window children outside the directories read here) and stored
+    * null values (its kernels treat them differently per method).
+    */
+  private def plannedUpserts(routed: DataFrame, policy: RetentionPolicy)
+      : Option[Seq[(Int, DataFrame, Set[(Int, Long)])]] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val steps = policy.levels.map(_.secondsPerPoint)
+    val points = routed.select("metric", "level", "interval", "value").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    if (points.exists(_._3 < 0)) return None
+    val pbs: Map[String, Int] = points.map(_._1).distinct.map(m => m -> pbOf(m)).toMap
+    val direct: IndexedSeq[Map[(String, Long), Cell]] = steps.indices.map { i =>
+      points.iterator.collect {
+        case (m, l, iv, v) if l == i => (m, iv) -> Cell(v, Some(1L), Some(v))
+      }.toMap
+    }
+    // windows of level i the batch can touch: every point routed finer
+    // than level i, aligned to level i's step
+    val windows: IndexedSeq[Set[(String, Long)]] = steps.indices.map { i =>
+      points.iterator.collect { case (m, l, iv, _) if l < i => (m, iv - iv % steps(i)) }.toSet
+    }
+    val reads = steps.indices.drop(1).filter(i => windows(i).nonEmpty).map { i =>
+      (i - 1) -> Future(taggedRead(i - 1)(
+        existingChildren(i - 1, steps(i - 1), steps(i), windows(i), pbs)))(MetricStore.writeEc)
+    }
+    val read = reads.map { case (l, f) => l -> Await.result(f, Duration.Inf) }
+    if (read.exists(_._2.isEmpty)) return None
+    val existing = read.map { case (l, rows) => l -> rows.get }.toMap
+
+    val incoming = direct.toArray
+    var changed: Set[(String, Long)] = direct(0).keySet
+    for (i <- 1 until steps.size) {
+      val lower = steps(i)
+      val slots = lower / steps(i - 1)
+      val children = (existing.getOrElse(i - 1, Map.empty) ++ incoming(i - 1))
+        .toSeq.groupBy { case ((m, iv), _) => (m, iv - iv % lower) }
+      // one window's children in chronological order -> its rollup row,
+      // or None when the window fails the xff gate
+      def consolidate(kids: Seq[((String, Long), Cell)]): Option[Cell] = {
+        val known = kids.sortBy(_._1._2).map(_._2)
+        if (known.size.toDouble / slots < policy.xff.toDouble) None
+        else Some(Cell(
+          AggregationMethod.aggregate(policy.aggregation, known.map(_.value),
+            Some(known.map(c => Some(c.value)) ++ Seq.fill(slots - known.size)(None))),
+          if (known.forall(_.known.isDefined)) Some(known.flatMap(_.known).sum) else None,
+          if (known.forall(_.vsum.isDefined)) Some(known.flatMap(_.vsum).sum) else None))
+      }
+      val propagated: Map[(String, Long), Cell] =
+        changed.map { case (m, iv) => (m, iv - iv % lower) }.flatMap { w =>
+          children.get(w).flatMap(consolidate).map(w -> _)
+        }.toMap
+      incoming(i) = propagated ++ direct(i)
+      changed = propagated.keySet ++ direct(i).keySet
+    }
+
+    Some(steps.indices.filter(i => incoming(i).nonEmpty).map { i =>
+      val bs = bucketSeconds(steps(i))
+      val rows = incoming(i).toSeq.map { case ((m, iv), c) =>
+        val counts: Seq[Any] =
+          if (i == 0) Nil
+          else Seq(c.known.map(Long.box).orNull, c.vsum.map(Double.box).orNull)
+        // Seq[Any] throughout: a literal Seq(int, long, long) would widen pb
+        org.apache.spark.sql.Row.fromSeq(
+          Seq[Any](m, iv, c.value) ++ counts ++ Seq[Any](pbs(m), iv / bs, 1L))
+      }
+      val touched = incoming(i).keys.map { case (m, iv) => (pbs(m), iv / bs) }.toSet
+      val schema = levelSchema(i, withCounts = i > 0)
+        .add("prio", org.apache.spark.sql.types.LongType)
+      (i, spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), schema), touched)
+    })
+  }
+
+  /** Existing rows of level i (step `step`) whose window at the next
+    * level (step `lowerStep`) is in `windows`, read from exactly the
+    * (pb, tb) directories those windows cover — a window may straddle a
+    * time bucket — and filtered to the windows before the collect. None
+    * when a row holds a null value (see [[plannedUpserts]]).
+    */
+  private def existingChildren(i: Int, step: Int, lowerStep: Int,
+                               windows: Set[(String, Long)],
+                               pbs: Map[String, Int]): Option[Map[(String, Long), Cell]] = {
+    val bs = bucketSeconds(step)
+    val dirs = windows.flatMap { case (m, w) =>
+      (w / bs to (w + lowerStep - 1) / bs).map(t => s"${levelPath(i)}/pb=${pbs(m)}/tb=$t")
+    }.toSeq.sorted.filter(d => new java.io.File(d).exists())
+    if (dirs.isEmpty) return Some(Map.empty)
+    val inWindow = udf((m: String, iv: Long) => windows.contains((m, iv - iv % lowerStep)))
+    val rows = withCountCols(
+      spark.read.option("basePath", levelPath(i))
+        .schema(levelSchema(i)) // skip the schema-inference job
+        .parquet(dirs: _*), i)
+      .where(inWindow(col("metric"), col("interval")))
+      .collect()
+    if (rows.exists(_.isNullAt(2))) None
+    else Some(rows.map { r =>
+      val v = r.getDouble(2)
+      (r.getString(0), r.getLong(1)) -> (
+        if (i == 0) Cell(v, Some(1L), Some(v))
+        else Cell(v, if (r.isNullAt(3)) None else Some(r.getLong(3)),
+          if (r.isNullAt(4)) None else Some(r.getDouble(4))))
+    }.toMap)
   }
 
   /** whisper update() single-point semantics: rejects future timestamps
@@ -1692,9 +1885,29 @@ object MetricStore {
     */
   private[store] val MaxParallelPbWrites: Int = 16
 
-  /** Shared pool for deferred fresh-level writes (daemon threads so a
-    * forgotten store never blocks JVM exit). Sized small: each task is a
-    * whole Spark write job — the parallelism that matters is between the
+  /** Incremental batches whose routed points plus cascade child rows
+    * (see [[MetricStore.plannedCascadeRows]]) stay at or under this many
+    * rows plan their cascade on the driver; larger ones run the Spark
+    * cascade. Memory: the driver holds each row a few times over (the
+    * collected batch, the read children, each level's incoming map) at
+    * roughly 100-150 B per row as boxed Scala tuples — tens of MB at
+    * the bound, far inside any driver heap — and each level's upsert
+    * ships back as a local relation of at most this many rows, a few MB
+    * of task payload. A 1,200-point flush into a 10s/1m/10m policy sizes
+    * at ~20k; a bulk backfill of 100k+ points is over it on the routed
+    * count alone.
+    */
+  private[store] val DriverCascadeMaxRows: Long = 1L << 16
+
+  /** One child row of the driver-planned cascade: the stored value plus
+    * its contribution counts (None = unknown).
+    */
+  private[store] final case class Cell(value: Double, known: Option[Long], vsum: Option[Double])
+
+  /** Shared pool for deferred fresh-level writes and the driver-planned
+    * cascade's level reads and writes (daemon threads so a forgotten
+    * store never blocks JVM exit). Sized small: each task is a
+    * whole Spark job — the parallelism that matters is between the
     * job and the caller's next cascade step, not among many writers.
     */
   private[store] lazy val writeEc: scala.concurrent.ExecutionContext =

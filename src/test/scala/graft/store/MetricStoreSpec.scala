@@ -196,40 +196,44 @@ class MetricStoreSpec extends AnyFunSuite {
   }
 
   test("incremental ingest rewrites ONLY touched (pb, tb) partitions") {
-    val store = freshStore()
-    store.create("m", RetentionPolicy(Seq(ArchiveInfo(60, 100000)))) // ~69 days
-    // batch A: points spread across many time buckets (bucket = 60·1024 s)
-    val bucket = 60L * 1024
-    val ptsA = (0 until 40).map(i => ("m", Now - i * (bucket / 4), i.toDouble, i.toLong))
-    store.updateMany(ptsA.toDF("metric", "ts", "value", "seq"), Now)
+    // both cascade regimes land upserts through the same touched-partition
+    // merge, so both must leave every other partition alone
+    CascadeRegimes.All.foreach { regime =>
+      val store = CascadeRegimes.force(freshStore(), regime)
+      store.create("m", RetentionPolicy(Seq(ArchiveInfo(60, 100000)))) // ~69 days
+      // batch A: points spread across many time buckets (bucket = 60·1024 s)
+      val bucket = 60L * 1024
+      val ptsA = (0 until 40).map(i => ("m", Now - i * (bucket / 4), i.toDouble, i.toLong))
+      store.updateMany(ptsA.toDF("metric", "ts", "value", "seq"), Now)
 
-    def partFiles(): Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      val root = new java.io.File(store.root + "/level_0")
-      walk(root).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath.stripPrefix(root.getPath) -> f.lastModified()).toMap
+      def partFiles(): Map[String, Long] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        val root = new java.io.File(store.root + "/level_0")
+        walk(root).filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getPath.stripPrefix(root.getPath) -> f.lastModified()).toMap
+      }
+      val before = partFiles()
+      assert(before.keys
+        .map(_.split("/").filter(_.startsWith("tb=")).head).toSet.size > 5,
+        "several tb partitions exist")
+
+      Thread.sleep(1100) // mtime resolution
+      // batch B: one point in one bucket
+      store.updateMany(Seq(("m", Now - 30, 99.0, 100L))
+        .toDF("metric", "ts", "value", "seq"), Now)
+      val after = partFiles()
+
+      // every pre-existing file outside the touched bucket is byte-for-byte
+      // untouched (same path, same mtime); only the touched partition changed
+      val changedDirs = (after.keySet ++ before.keySet)
+        .filter(p => before.get(p) != after.get(p))
+        .map(_.split("/").filter(_.startsWith("tb=")).head)
+      assert(changedDirs.size == 1, s"$regime: expected 1 touched tb dir, got $changedDirs")
+      // and the data merged correctly (99.0 landed in slot Now-60)
+      val Some(res) = store.fetch("m", Now - 120, Now, Now)
+      assert(res.values.flatten.contains(99.0), s"$regime")
     }
-    val before = partFiles()
-    assert(before.keys
-      .map(_.split("/").filter(_.startsWith("tb=")).head).toSet.size > 5,
-      "several tb partitions exist")
-
-    Thread.sleep(1100) // mtime resolution
-    // batch B: one point in one bucket
-    store.updateMany(Seq(("m", Now - 30, 99.0, 100L))
-      .toDF("metric", "ts", "value", "seq"), Now)
-    val after = partFiles()
-
-    // every pre-existing file outside the touched bucket is byte-for-byte
-    // untouched (same path, same mtime); only the touched partition changed
-    val changedDirs = (after.keySet ++ before.keySet)
-      .filter(p => before.get(p) != after.get(p))
-      .map(_.split("/").filter(_.startsWith("tb=")).head)
-    assert(changedDirs.size == 1, s"expected 1 touched tb dir, got $changedDirs")
-    // and the data merged correctly (99.0 landed in slot Now-60)
-    val Some(res) = store.fetch("m", Now - 120, Now, Now)
-    assert(res.values.flatten.contains(99.0))
   }
 
   test("vacuum drops expired time buckets") {

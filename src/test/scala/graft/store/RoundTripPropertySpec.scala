@@ -92,6 +92,71 @@ class RoundTripPropertySpec extends AnyFunSuite {
     state.map(_.toMap)
   }
 
+  private def levelState(st: MetricStore, i: Int) = st.levelData(i).collect()
+    .map { r =>
+      val counts =
+        if (i == 0) (1L, r.getAs[Double]("value"))
+        else (r.getAs[Long]("known"), r.getAs[Double]("vsum"))
+      (r.getAs[String]("metric"), r.getAs[Long]("interval")) ->
+        ((r.getAs[Double]("value"), counts._1, counts._2))
+    }.toMap
+
+  private def markers(st: MetricStore) = (st.rollupsDerivedFromLevel0, st.countsExact)
+
+  /** One policy through both cases — one batch, and the same points as
+    * two interleaved batches — in each cascade regime, forced. The
+    * driver-planned cascade only runs on existing levels, so its stores
+    * start with empty level directories; the Spark regime's one-batch
+    * store starts fresh, its bulk path. Both regimes must match the
+    * simulator and leave the same store markers.
+    */
+  private def checkPolicy(policy: RetentionPolicy, pi: Int,
+                          value: scala.util.Random => Double, rnd: scala.util.Random): Unit = {
+    val metrics = Seq("m1", "m2")
+    val horizon = policy.maxRetention + policy.maxRetention / 4 // incl. too-old
+    val points = (0 until 300).map { i =>
+      (metrics(rnd.nextInt(2)),
+        Now - (rnd.nextDouble() * horizon).toLong,
+        value(rnd),
+        i.toLong)
+    }
+    // split on ARRIVAL order (seq); timestamps stay randomly interleaved
+    // so batch 2 still dirties windows batch 1 already rolled up AND
+    // contests already-written slots
+    val (b1, b2) = points.partition(_._4 < 150)
+    val want = simulate(Seq(points), policy, Now)
+    // the SAME point set ingested as two batches must converge to the
+    // batch-SEQUENCED simulation — a later update_many owns every slot
+    // it writes (whisper's ring overwrite), so a contested slot's winner
+    // can legitimately differ from the one-batch ingest when batch 2
+    // carries an older-timestamp duplicate; the touched-window cascade
+    // must still repair every window batch 2 dirties
+    val want2 = simulate(Seq(b1, b2), policy, Now)
+    def newStore(tag: String, regime: CascadeRegimes.Regime) = {
+      val st = CascadeRegimes.force(new MetricStore(spark,
+        Files.createTempDirectory(s"ms-prop$pi-$tag-$regime").toString, numBuckets = 4), regime)
+      metrics.foreach(st.create(_, policy))
+      st
+    }
+    val marks = CascadeRegimes.All.map { regime =>
+      val store = newStore("one", regime)
+      if (regime == CascadeRegimes.Driver) CascadeRegimes.primeLevels(store, policy.levels.size)
+      store.updateMany(points.toDF("metric", "ts", "value", "seq"), Now)
+      policy.levels.indices.foreach { i =>
+        assert(levelState(store, i) == want(i), s"policy $pi level $i ($regime)")
+      }
+
+      val store2 = newStore("inc", regime)
+      store2.updateMany(b1.toDF("metric", "ts", "value", "seq"), Now)
+      store2.updateMany(b2.toDF("metric", "ts", "value", "seq"), Now)
+      policy.levels.indices.foreach { i =>
+        assert(levelState(store2, i) == want2(i), s"policy $pi level $i (incremental, $regime)")
+      }
+      (markers(store), markers(store2))
+    }
+    assert(marks.distinct.size == 1, s"policy $pi: store markers differ by regime: $marks")
+  }
+
   test("store agrees with the reference simulator on random batches (3 policies)") {
     val rnd = new scala.util.Random(42)
     val policies = Seq(
@@ -102,54 +167,28 @@ class RoundTripPropertySpec extends AnyFunSuite {
       RetentionPolicy(Seq(ArchiveInfo(10, 400), ArchiveInfo(60, 400)), xff = 0f,
         aggregation = AggregationMethod.Sum)
     )
-    policies.zipWithIndex.foreach {
-      case (policy, pi) =>
-        val store = new MetricStore(
-          spark, Files.createTempDirectory(s"ms-prop$pi").toString, numBuckets = 4)
-        val metrics = Seq("m1", "m2")
-        metrics.foreach(store.create(_, policy))
-        val horizon = policy.maxRetention + policy.maxRetention / 4 // incl. too-old
-        val points = (0 until 300).map { i =>
-          (metrics(rnd.nextInt(2)),
-            Now - (rnd.nextDouble() * horizon).toLong,
-            math.floor(rnd.nextDouble() * 200) / 2 - 50, // 0.5-grid values, some negative
-            i.toLong)
-        }
-        store.updateMany(points.toDF("metric", "ts", "value", "seq"), Now)
+    policies.zipWithIndex.foreach { case (policy, pi) =>
+      // 0.5-grid values, some negative
+      checkPolicy(policy, pi, r => math.floor(r.nextDouble() * 200) / 2 - 50, rnd)
+    }
+  }
 
-        val want = simulate(Seq(points), policy, Now)
-        def levelState(st: MetricStore, i: Int) = st.levelData(i).collect()
-          .map { r =>
-            val counts =
-              if (i == 0) (1L, r.getAs[Double]("value"))
-              else (r.getAs[Long]("known"), r.getAs[Double]("vsum"))
-            (r.getAs[String]("metric"), r.getAs[Long]("interval")) ->
-              ((r.getAs[Double]("value"), counts._1, counts._2))
-          }.toMap
-        policy.levels.indices.foreach { i =>
-          assert(levelState(store, i) == want(i), s"policy $pi level $i")
-        }
-
-        // incremental property: the SAME point set ingested as two
-        // interleaved batches must converge to the batch-SEQUENCED
-        // simulation — a later update_many owns every slot it writes
-        // (whisper's ring overwrite), so a contested slot's winner can
-        // legitimately differ from the one-batch ingest when batch 2
-        // carries an older-timestamp duplicate; the touched-window
-        // cascade must still repair every window batch 2 dirties
-        val store2 = new MetricStore(
-          spark, Files.createTempDirectory(s"ms-prop$pi-inc").toString, numBuckets = 4)
-        metrics.foreach(store2.create(_, policy))
-        // split on ARRIVAL order (seq); timestamps stay randomly
-        // interleaved so batch 2 still dirties windows batch 1 already
-        // rolled up AND contests already-written slots
-        val (b1, b2) = points.partition(_._4 < 150)
-        store2.updateMany(b1.toDF("metric", "ts", "value", "seq"), Now)
-        store2.updateMany(b2.toDF("metric", "ts", "value", "seq"), Now)
-        val want2 = simulate(Seq(b1, b2), policy, Now)
-        policy.levels.indices.foreach { i =>
-          assert(levelState(store2, i) == want2(i), s"policy $pi level $i (incremental)")
-        }
+  test("simulator agreement under last, absmax/absmin with |v| ties, and avg_zero") {
+    val rnd = new scala.util.Random(7)
+    val policies = Seq(
+      RetentionPolicy(Seq(ArchiveInfo(60, 200), ArchiveInfo(300, 200)), xff = 0.5f,
+        aggregation = AggregationMethod.Last),
+      RetentionPolicy(Seq(ArchiveInfo(30, 100), ArchiveInfo(120, 100),
+        ArchiveInfo(600, 60)), xff = 0.25f, aggregation = AggregationMethod.AbsMax),
+      RetentionPolicy(Seq(ArchiveInfo(30, 100), ArchiveInfo(120, 100),
+        ArchiveInfo(600, 60)), xff = 0f, aggregation = AggregationMethod.AbsMin),
+      RetentionPolicy(Seq(ArchiveInfo(10, 400), ArchiveInfo(60, 400),
+        ArchiveInfo(300, 200)), xff = 0.5f, aggregation = AggregationMethod.AvgZero)
+    )
+    policies.zipWithIndex.foreach { case (policy, pi) =>
+      // values in {-3, ..., 3}: many windows hold both v and -v, so the
+      // absmax/absmin tie-break (earliest slot wins) decides the sign
+      checkPolicy(policy, 10 + pi, r => (r.nextInt(7) - 3).toDouble, rnd)
     }
   }
 }

@@ -130,6 +130,53 @@ class StoreFormatSpec extends AnyFunSuite {
     assert(after.flatten.contains(99.0), s"reopened write not visible: $after")
   }
 
+  test("reopened with a smaller bucket default, a straddling window still reads every child") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ms-straddle").toString
+    val store = new MetricStore(spark, root, numBuckets = 8)
+    val policy = RetentionPolicy.parse("10s:6h,1m:7d", xff = 0f)
+    val metrics = (0 until 16).map(i => s"m$i")
+    metrics.foreach(store.create(_, policy))
+    val now = 10300L
+    // level-0 buckets span 10,240 s, so the 1m window [10200, 10260)
+    // straddles tb=0 (10200..10230) and tb=1 (10240, 10250)
+    val values = Seq(1.0, 1.0, 1.0, 1.0, 3.0, 5.0)
+    val pts = metrics.flatMap(m => values.zipWithIndex.map { case (v, k) =>
+      (m, 10200L + 10 * k, v, k.toLong) })
+    store.updateMany(pts.toDF("metric", "ts", "value", "seq"), now)
+
+    // the persisted layout (8 buckets) wins over the constructor's 2; the
+    // Spark cascade's hull read must enumerate all 8 pbs, or every metric
+    // with pb >= 2 loses its tb=0 children and averages only 10240/10250
+    val reopened = CascadeRegimes.force(new MetricStore(spark, root, 2), CascadeRegimes.Spark)
+    reopened.updateMany(
+      metrics.map(m => (m, 10250L, 5.0, 100L)).toDF("metric", "ts", "value", "seq"), now)
+    val l1 = reopened.levelData(1).where(col("interval") === 10200L)
+      .select("metric", "value", "known", "vsum").as[(String, Double, Long, Double)]
+      .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(l1 == metrics.map(_ -> ((2.0, 6L, 12.0))).toMap, s"level-1 windows: $l1")
+  }
+
+  test("driver-side pbOf matches the pb= directory the writer produces") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ms-pbof").toString
+    val store = new MetricStore(spark, root, numBuckets = 8)
+    val metrics = Seq("", "a", "métrique", "指标.cpu", "emoji🙂", "café.temp") ++
+      (0 until 24).map(i => s"host$i.load")
+    store.createAll(metrics, RetentionPolicy(Seq(ArchiveInfo(60, 300)), xff = 0f))
+    store.updateMany(metrics.zipWithIndex
+      .map { case (m, i) => (m, Now - 120, i.toDouble, i.toLong) }
+      .toDF("metric", "ts", "value", "seq"), Now)
+    // pb as partition discovery reads it back from the directory names
+    val written = spark.read.parquet(s"$root/level_0").select("metric", "pb")
+      .as[(String, Int)].collect().toMap
+    assert(written.keySet == metrics.toSet)
+    metrics.foreach(m => assert(store.pbOf(m) == written(m), s"metric '$m'"))
+    // a handle opened with another bucket default hashes by the persisted count
+    val reopened = new MetricStore(spark, root, numBuckets = 2)
+    metrics.foreach(m => assert(reopened.pbOf(m) == written(m), s"reopened, metric '$m'"))
+  }
+
   test("level files are ordered by (metric, interval) on fresh AND merged writes") {
     import spark.implicits._
     val root = Files.createTempDirectory("ms-fileorder").toString
